@@ -7510,7 +7510,8 @@ object SparkEntry {
       // tie group recomposes the identical rank, because dbkt is a
       // monotone prefix of the doc_id sort key — the same discipline
       // as the bkt rank below. ScaleSpec pins bit-equality + the plan.
-      val dDiv = math.max(1L, d.agg(max("doc_id")).head().getLong(0) / 256L + 1L)
+      val dDiv = math.max(1L,
+        d.agg(coalesce(max("doc_id"), lit(0L))).head().getLong(0) / 256L + 1L)
       val dd = d.withColumn("dbkt", expr(s"doc_id div ${dDiv}L"))
       val wdc = Window.partitionBy("lang", "n_chars").orderBy("dbkt")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

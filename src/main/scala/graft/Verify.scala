@@ -51,13 +51,25 @@ object Verify {
     // unchanged files). Stamp the dump with the builder tree's SHA +
     // dirty flag so compare_oracle.py can prove freshness by identity:
     // equal clean SHAs ⇒ fresh regardless of mtimes. Best-effort — a
-    // missing stamp just falls back to the mtime guard.
+    // missing stamp just falls back to the mtime guard. git runs in the
+    // checkout these classes were built from (not the JVM's cwd), and a
+    // failing git call skips the stamp rather than recording its error
+    // text as the SHA.
     try {
+      val repoRoot = Iterator.iterate(Paths.get(getClass.getProtectionDomain
+          .getCodeSource.getLocation.toURI).toAbsolutePath)(_.getParent)
+        .takeWhile(_ != null).find(d => Files.exists(d.resolve(".git")))
+        .getOrElse(throw new IllegalStateException(
+          "no git checkout above the Verify classes"))
       def git(cmd: String*): String = {
         val p = new ProcessBuilder(("git" +: cmd): _*)
-          .redirectErrorStream(true).start()
+          .directory(repoRoot.toFile)
+          .redirectError(ProcessBuilder.Redirect.INHERIT).start()
         val out = new String(p.getInputStream.readAllBytes()).trim
-        p.waitFor(); out
+        val rc = p.waitFor()
+        if (rc != 0) throw new IllegalStateException(
+          s"git ${cmd.mkString(" ")} exited $rc")
+        out
       }
       val sha = git("rev-parse", "HEAD")
       val dirty = git("status", "--porcelain").nonEmpty

@@ -31,7 +31,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
   import spark.implicits._
 
   private val streamsPath = s"$rootDir/streams"
-  private val hwmPath = s"$rootDir/streams.hwm"
+  private val hwmSegDir = s"$rootDir/streams.hwm.d"
   private val datapointsPath = s"$rootDir/datapoints"
 
   // ---- catalog (stream metadata) -------------------------------------
@@ -41,7 +41,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     * would be an O(#streams) driver-side rewrite per micro-batch. Instead
     * `finishAppend` marks the touched streams' SHARDS dirty and records
     * the batch's per-stream time bounds in an append-only sidecar
-    * (`streams.hwm`, one JSONL line per stream per batch — O(batch), no
+    * (`streams.hwm.d/`, one JSONL line per stream per batch — O(batch), no
     * Spark job, the coverage-marker pattern applied to the primary root).
     * `flush()` persists only the dirty shards and truncates the sidecar;
     * `loadCatalog` replays a surviving sidecar so a crash between append
@@ -55,9 +55,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     * On disk the catalog is HASH-SHARDED: `<root>/streams/shard=KKK/`
     * (256 shards), so a flush rewrites O(changed streams + touched
     * shards), never the whole catalog — at 10⁶ streams a single-stream
-    * tag update rewrites ~1/256th of the metastore. Pre-shard stores
-    * (one flat parquet dir) load transparently and migrate to the
-    * sharded layout on their next flush.
+    * tag update rewrites ~1/256th of the metastore.
     */
   // DECLARED BEFORE `catalog`: `loadCatalog()` runs in the constructor, so
   // anything it reads or writes must already be initialized — a later
@@ -79,9 +77,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     * `catalog`: loadCatalog()/replayHwm() run in the constructor. */
   private var hwmBytes: Long = 0L
   private[graft] final val catalogShards = 256
-  /** True while the on-disk catalog is still the pre-shard flat layout —
-    * the next flush rewrites every shard and removes the legacy files. */
-  private var legacyCatalogLayout = false
   private var catalog: Map[String, StreamDescriptor] = loadCatalog()
   /** Inverted (tag key, value) → stream-id index over the FLAT tag maps —
     * what makes A1's existing-stream check and A5's find O(matched ids)
@@ -160,7 +155,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     scala.collection.mutable.Map.empty[String, Option[Long]]
   private def catalogDirty: Boolean = dirtyShards.nonEmpty
   private def markDirty(id: String): Unit = { dirtyShards += shardOf(id); () }
-  private def markAllDirty(): Unit = { dirtyShards ++= (0 until catalogShards); () }
   // stream ids created since the last persist — their descriptors exist
   // only in memory, so data writes keyed by them must force a flush first
   private var unpersisted: Set[String] = Set.empty
@@ -196,37 +190,14 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       else if (nonEmptyDir(shardBakPath(k))) Some(shardBakPath(k))
       else None
     }
-    val raw =
-      if (shardPaths.nonEmpty) spark.read.parquet(shardPaths: _*)
-      else {
-        // legacy flat layout (or its whole-dir rename-aside backup)
-        val hasFiles = hList(streamsPath)
-          .exists(f => f.isFile && !f.getPath.getName.startsWith("."))
-        val src = if (hasFiles) streamsPath
-                  else if (hExists(s"$streamsPath.old")) s"$streamsPath.old"
-                  else return Map.empty
-        legacyCatalogLayout = true
-        spark.read.parquet(src)
-      }
-    // catalogs persisted before value_type_options existed self-migrate
-    // (the column is absent from their parquet schema)
-    val migrated =
-      if (raw.columns.contains("value_type_options")) raw
-      else raw.withColumn("value_type_options", lit(null).cast("string"))
-    val loaded = migrated.as[StreamDescriptor]
-      .collect()
-      // tags_json is always derivable from the flat dotted map: rebuild
-      // it on load so catalogs persisted before the nested-document form
-      // (flat JSON with literal dotted keys) self-migrate; an
-      // unrepresentable legacy key set keeps its stored document
-      .map(d => d.copy(tags_json =
-        scala.util.Try(Json.nested(d.tags)).getOrElse(d.tags_json)))
-      .map(d => d.stream_id -> d).toMap
+    if (shardPaths.isEmpty) return Map.empty
+    val loaded = spark.read.parquet(shardPaths: _*).as[StreamDescriptor]
+      .collect().map(d => d.stream_id -> d).toMap
     replayHwm(loaded)
   }
 
   /** Self-heal time bounds from the append sidecar: a crash between an
-    * append and the next catalog flush leaves `streams.hwm` lines the
+    * append and the next catalog flush leaves `streams.hwm.d` lines the
     * persisted catalog doesn't cover. Widening is idempotent (min/max), so
     * replaying lines a later flush DID cover is a no-op; a torn final line
     * from a mid-write crash is skipped (its batch crashed before the data
@@ -255,9 +226,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
         case _ => // torn tail line — skip
       } finally in.close()
     }
-    // legacy single-file sidecar (pre-r13 stores), then the segment dir
-    if (hExists(hwmPath))
-      replayFile(hPath(hwmPath), dfs.getFileStatus(hPath(hwmPath)).getLen)
     hList(hwmSegDir)
       .filter(st => st.isFile && !st.getPath.getName.startsWith("."))
       .sortBy(_.getPath.getName)
@@ -295,8 +263,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     if (hwmBytes > hwmFlushBytes) flush()
   }
 
-  private def hwmSegDir: String = s"$hwmPath.d"
-
   /** Sidecar flush threshold SCALES with catalog size: a fixed cap would
     * quietly reintroduce a per-batch catalog rewrite once one micro-batch
     * touches enough streams to cross it (one line is ~60 B, so 1 MiB ≈
@@ -317,7 +283,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     // backup (never a window where a complete copy of a shard isn't on
     // disk; loadCatalog falls back to `.old_shard=KKK`). Flush cost is
     // O(streams in changed shards), not O(catalog).
-    if (legacyCatalogLayout) markAllDirty()
     val dirty = dirtyShards.toSet
     val shardU = udf((s: String) => f"${(s.hashCode & Int.MaxValue) % catalogShards}%03d")
     val rows = catalog.values.filter(d => dirty(shardOf(d.stream_id))).toSeq
@@ -328,47 +293,23 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
         .repartition(math.min(dirty.size, 32), col("shard"))
         .write.mode(SaveMode.Overwrite).partitionBy("shard")
         .parquet(tmpRoot)
-    if (legacyCatalogLayout) {
-      // migration off the flat layout: every shard just wrote into
-      // tmpRoot, so swap the WHOLE directory (the pre-shard crash
-      // contract) — per-shard swaps would strand unswapped shards on a
-      // mid-migration crash, because the loader prefers shard dirs the
-      // moment any exist. loadCatalog's flat fallback covers the
-      // (streams -> streams.old) window.
-      if (!hExists(tmpRoot)) dfs.mkdirs(hPath(tmpRoot)) // fully-emptied catalog
-      val dst = hPath(streamsPath)
-      val bak = hPath(s"$streamsPath.old")
+    dfs.mkdirs(hPath(streamsPath))
+    dirty.toSeq.sorted.foreach { k =>
+      val cur = hPath(shardDirPath(k)); val bak = hPath(shardBakPath(k))
+      val tmp = hPath(s"$tmpRoot/${shardKey(k)}")
       if (dfs.exists(bak)) rmTree(bak.toString)
-      if (dfs.exists(dst) && !dfs.rename(dst, bak))
-        throw new java.io.IOException(s"failed to move catalog aside: $dst -> $bak")
-      if (!dfs.rename(hPath(tmpRoot), dst))
-        throw new java.io.IOException(s"failed to move catalog into place: $tmpRoot -> $dst")
+      if (dfs.exists(cur) && !dfs.rename(cur, bak))
+        throw new java.io.IOException(s"failed to move shard aside: $cur -> $bak")
+      // a dirty shard with no surviving streams has no tmp dir: the
+      // rename-aside + backup drop below IS its deletion
+      if (dfs.exists(tmp) && !dfs.rename(tmp, cur))
+        throw new java.io.IOException(s"failed to move shard into place: $tmp -> $cur")
       if (dfs.exists(bak)) rmTree(bak.toString)
-      // drop the Spark write artifacts (_SUCCESS) that rode along in the
-      // whole-dir swap — the sharded layout holds only shard=KKK dirs
-      hList(streamsPath).filter(_.isFile)
-        .foreach(f => dfs.delete(f.getPath, false))
-      legacyCatalogLayout = false
-    } else {
-      dfs.mkdirs(hPath(streamsPath))
-      dirty.toSeq.sorted.foreach { k =>
-        val cur = hPath(shardDirPath(k)); val bak = hPath(shardBakPath(k))
-        val tmp = hPath(s"$tmpRoot/${shardKey(k)}")
-        if (dfs.exists(bak)) rmTree(bak.toString)
-        if (dfs.exists(cur) && !dfs.rename(cur, bak))
-          throw new java.io.IOException(s"failed to move shard aside: $cur -> $bak")
-        // a dirty shard with no surviving streams has no tmp dir: the
-        // rename-aside + backup drop below IS its deletion
-        if (dfs.exists(tmp) && !dfs.rename(tmp, cur))
-          throw new java.io.IOException(s"failed to move shard into place: $tmp -> $cur")
-        if (dfs.exists(bak)) rmTree(bak.toString)
-      }
-      if (hExists(tmpRoot)) rmTree(tmpRoot)
     }
+    if (hExists(tmpRoot)) rmTree(tmpRoot)
     // the persisted catalog covers every in-memory bound, so the sidecar
     // is now redundant — truncate it AFTER the swap (a crash in between
     // just replays already-covered lines, a no-op)
-    dfs.delete(hPath(hwmPath), false)
     dfs.delete(hPath(hwmSegDir), true)
     hwmBytes = 0L
     // only mark clean once the data is durably in place — a failed write

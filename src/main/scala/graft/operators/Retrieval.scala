@@ -248,7 +248,9 @@ object Retrieval {
     // marker and publishStats would retire BOTH markers — when heal later
     // replayed the pending delete it would see one marker and subtract
     // the removed totals a second time, leaving (N, avgdl) permanently
-    // wrong. Healing completes the delete before this write plans.
+    // wrong. Healing completes the delete before this write plans, and
+    // recounts a populated index whose marker is missing, so the delta
+    // maintenance below always starts from exact totals.
     healIndex(spark, root)
     val fs = retrievalFs(spark, root)
     // appends extend the positions tree iff the build created it
@@ -277,10 +279,6 @@ object Retrieval {
       graft.operators.IndexGen.checkLease(fs, root, lease)
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/positions"), true)
     }
-    // the legacy-index case: appending to an index that predates the
-    // stats sidecar — delta-maintenance has no base, so recount after
-    val mustRecount = !overwrite && readStats(fs, root).isEmpty &&
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/doclens"))
     // durable append intent BEFORE data lands (data-first would leave
     // the sidecar silently stale on a crash between the doclens write
     // and the marker rotation): heal sees the intent and recounts
@@ -311,8 +309,6 @@ object Retrieval {
       .withColumn("bucket", pmod(xxhash64(col("tok")), lit(nBuckets.toLong)))
       .repartition(col("bucket"))
       .write.mode(mode).partitionBy("bucket").parquet(s"$root/postings")
-    // witness the dl-bearing layout so heal never footer-probes this root
-    fs.create(new org.apache.hadoop.fs.Path(root, DlV2Marker), true).close()
     // a missing Observation key means AQE pruned the empty subtree ⇒ 0
     val got = obs.get
     val dn = got.get("dn").map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -334,13 +330,10 @@ object Retrieval {
     // a successor's state (its data files are append-only and the
     // successor's heal recounts from the durable append intent)
     graft.operators.IndexGen.checkLease(fs, root, lease)
-    if (mustRecount) recountStats(spark, fs, root)
-    else {
-      val (n0, sdl0) =
-        if (overwrite) (0L, 0L)
-        else readStats(fs, root).map(s => (s._2, s._3)).getOrElse((0L, 0L))
-      publishStats(fs, root, n0 + dn, sdl0 + dsdl)
-    }
+    val (n0, sdl0) =
+      if (overwrite) (0L, 0L)
+      else readStats(fs, root).map(s => (s._2, s._3)).getOrElse((0L, 0L))
+    publishStats(fs, root, n0 + dn, sdl0 + dsdl)
     fs.delete(pending, false)
     graft.operators.IndexGen.release(fs, root, lease)
   }
@@ -413,8 +406,8 @@ object Retrieval {
     }
   }
 
-  /** Full recount from doclens + fresh publish — the crash-recovery /
-    * legacy-migration lane only, never the serving path.
+  /** Full recount from doclens + fresh publish — the crash-recovery
+    * lane only, never the serving path.
     */
   private def recountStats(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: String): Unit = {
@@ -444,12 +437,6 @@ object Retrieval {
   private val PosStageDir = ".bm25_posstage"
   private val PendingTmp = ".bm25_pending_tmp"
   private val PendingDelete = "_bm25_pending_delete"
-  // whole-tree swap states for the pre-r13 postings dl migration
-  private val DlMigStage = ".bm25_dlmig_stage"
-  private val DlMigOld = ".bm25_dlmig_old"
-  // zero-byte witness that the postings rows carry the denormalized dl
-  // column — lets heal skip the per-index footer probe after the first
-  private val DlV2Marker = "_bm25_dlv2"
 
   /** Delete documents from a [[buildIndex]] index — the takedown /
     * dedup-purge lane that completes the append-only lifecycle, same
@@ -545,8 +532,7 @@ object Retrieval {
       dlTouched, lease = lease.map(root -> _))
     stagedBucketDelete(spark, fs, s"$root/positions", s"$root/$PosStageDir",
       ids, lease = lease.map(root -> _)) // no-op on non-positional indexes
-    if (stats.isEmpty) recountStats(spark, fs, root) // pre-sidecar index
-    else cleanupStats(fs, root) // swaps published — retire the old gen
+    cleanupStats(fs, root) // swaps published — retire the old gen
     fs.delete(marker, true)
   }
 
@@ -684,8 +670,6 @@ object Retrieval {
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$newRoot/postings")
-    retrievalFs(spark, newRoot).create(new org.apache.hadoop.fs.Path(
-      newRoot, DlV2Marker), true).close()
     // (n_docs, sum_dl) piggybacked on the rewrite job it already runs
     val obs = org.apache.spark.sql.Observation()
     maskDocTombstones(spark, oldRoot,
@@ -772,9 +756,6 @@ object Retrieval {
     // Serve the published state untouched; heal runs only on lease-free
     // or expired-lease roots (begin() breaks expired ones).
     if (graft.operators.IndexGen.leaseHeld(fs, root)) return
-    // interrupted postings-dl migration first: its old/stage states must
-    // resolve before anything reads or rewrites the postings tree
-    healDlMigration(fs, root)
     // leftover stage/pending-tmp trees = pre-publish state of an
     // interrupted batched delete — dropping them rolls that phase back
     fs.delete(new org.apache.hadoop.fs.Path(s"$root/$StageDir"), true)
@@ -795,18 +776,12 @@ object Retrieval {
     healDir(new org.apache.hadoop.fs.Path(s"$root/postings"))
     healDir(new org.apache.hadoop.fs.Path(s"$root/doclens"))
     healDir(new org.apache.hadoop.fs.Path(s"$root/positions"))
-    // pre-r13 postings rows carry no dl column — the pinned-schema
-    // serving read would return NULL dl and silently garbage every
-    // score. One-time whole-tree self-migration, witnessed by a marker
-    // so the steady-state cost is one fs.exists
-    ensurePostingsDl(spark, fs, root)
     if (fs.exists(new org.apache.hadoop.fs.Path(root, PendingDelete)))
       runPendingDelete(spark, root)
     // stats sidecar heal (after any pending delete completed, so the
     // recount reflects final state): a durable append intent means the
     // sidecar may disagree with the trees — one full doclens recount
-    // republishes it; a missing marker on a populated index is a
-    // pre-sidecar layout self-migrating on first read
+    // republishes it; so does a populated index whose marker went missing
     val names = rootNames(fs, root)
     val appendPendings = names.filter(_.startsWith(AppendPending))
     if (appendPendings.nonEmpty ||
@@ -816,80 +791,6 @@ object Retrieval {
       appendPendings.foreach(n =>
         fs.delete(new org.apache.hadoop.fs.Path(root, n), false))
     } else cleanupStats(fs, root) // interrupted rotation: keep the max
-  }
-
-  /** Resolve an interrupted [[migratePostingsDl]] whole-tree swap.
-    * States: old + no postings ⇒ the crash fell between retiring the
-    * live tree and publishing the stage, and the stage was written
-    * COMPLETE before the retire — publish it (or roll the old tree back
-    * if the stage is somehow gone); old + postings ⇒ published — drop
-    * leftovers; stage alone ⇒ pre-publish (possibly incomplete) — drop
-    * it, the migration re-detects and re-runs.
-    */
-  private def healDlMigration(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Unit = {
-    val post = new org.apache.hadoop.fs.Path(s"$root/postings")
-    val stage = new org.apache.hadoop.fs.Path(s"$root/$DlMigStage")
-    val old = new org.apache.hadoop.fs.Path(s"$root/$DlMigOld")
-    if (fs.exists(old)) {
-      if (!fs.exists(post)) {
-        if (fs.exists(stage)) {
-          if (!fs.rename(stage, post))
-            throw new java.io.IOException(s"dl migration: cannot publish")
-          fs.delete(old, true)
-        } else {
-          if (!fs.rename(old, post)) // defensive rollback
-            throw new java.io.IOException(s"dl migration: cannot roll back")
-        }
-      } else { fs.delete(old, true); fs.delete(stage, true) }
-    } else fs.delete(stage, true)
-  }
-
-  /** One-time self-migration gate: indexes whose postings predate the
-    * dl denormalization (pre-r13 layouts — including ones whose stats
-    * sidecar an earlier heal already created) rewrite the postings tree
-    * once with dl joined in from doclens; everything after the witness
-    * marker exists is one fs.exists per heal.
-    */
-  private def ensurePostingsDl(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: String): Unit = {
-    val post = new org.apache.hadoop.fs.Path(s"$root/postings")
-    if (!fs.exists(post)) return
-    if (fs.exists(new org.apache.hadoop.fs.Path(root, DlV2Marker))) return
-    if (!spark.read.parquet(post.toString)
-        .schema.fieldNames.contains("dl"))
-      migratePostingsDl(spark, fs, root)
-    fs.create(new org.apache.hadoop.fs.Path(root, DlV2Marker), true).close()
-  }
-
-  /** Rewrite the whole postings tree with dl joined in from doclens,
-    * under the whole-tree swap heal states of [[healDlMigration]]
-    * (stage written complete → live tree retired → stage published) so
-    * a MIXED tree — some buckets migrated, some not, poisoning the
-    * pinned-schema read — can never exist. Docs mid-deletion whose
-    * doclens witness rows are already swapped away drop out via the
-    * inner join; the pending delete that owns them removes their
-    * postings rows right after.
-    */
-  private def migratePostingsDl(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: String): Unit = {
-    val postDir = s"$root/postings"
-    val dl = spark.read.parquet(s"$root/doclens").select("doc_id", "dl")
-    val stage = new org.apache.hadoop.fs.Path(s"$root/$DlMigStage")
-    spark.read.parquet(postDir)
-      .select(col("doc_id"), col("tok"), col("tf"),
-        col("bucket").cast("long").as("bucket"))
-      .join(dl, "doc_id")
-      .select("doc_id", "tok", "tf", "dl", "bucket")
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(stage.toString)
-    val post = new org.apache.hadoop.fs.Path(postDir)
-    val old = new org.apache.hadoop.fs.Path(s"$root/$DlMigOld")
-    if (!fs.rename(post, old))
-      throw new java.io.IOException(s"dl migration: cannot retire $post")
-    if (!fs.rename(stage, post))
-      throw new java.io.IOException(s"dl migration: cannot publish $stage")
-    fs.delete(old, true)
   }
 
   /** Per-bucket observability for a [[buildIndex]] index — the postings
@@ -952,15 +853,13 @@ object Retrieval {
     // lanes execute at the caller's sink). Tags only, no plan changes.
     val sc = spark.sparkContext
     sc.setJobDescription("bm25-audit:sample")
-    val (n, q) =
+    val q =
       try {
-        val n0 = docs.count()
-        val st0 = math.max(1L, (n0 + sampleBudget - 1) / sampleBudget)
-        (n0, docs.where(col(idCol) % st0 === 0)
+        val st = math.max(1L, (docs.count() + sampleBudget - 1) / sampleBudget)
+        docs.where(col(idCol) % st === 0)
           .select(col(idCol).as("qid"), col(textCol).as("qtext"))
-          .localCheckpoint(true)) // feeds both lanes
+          .localCheckpoint(true) // feeds both lanes
       } finally sc.setJobDescription(null)
-    val st = math.max(1L, (n + sampleBudget - 1) / sampleBudget)
     val direct = bm25TopK(docs, q, k, idCol = idCol, textCol = textCol)
     val indexed = bm25TopKIndexed(spark, root, q, k, nBuckets)
     val rr = direct.where(col("rnk") === 1).select(col("qid"), col("doc_id"))
@@ -1004,7 +903,7 @@ object Retrieval {
   }
 
   /** The stats sidecar's (n_docs, sum_dl) for a [[buildIndex]] index —
-    * heals first, so a crashed append/delete or a pre-sidecar layout
+    * heals first, so a crashed append/delete or a missing marker
     * resolves before the numbers are read. Zero jobs on the clean path.
     */
   def corpusStats(spark: org.apache.spark.sql.SparkSession,
@@ -1170,7 +1069,7 @@ object Retrieval {
     val df = postingsCk.groupBy("tok").agg(countDistinct("doc_id").as("df"))
     // (N, avgdl) from the sidecar marker — two numbers off a filename,
     // zero jobs (healIndex above guarantees the marker on any index
-    // with a doclens tree, including pre-sidecar layouts)
+    // with a doclens tree)
     val (n, sdl) = readStats(bfs, root)
       .map(s => (s._2, s._3)).getOrElse((0L, 0L))
     val avgdl = if (n > 0) sdl.toDouble / n else 0.0

@@ -837,6 +837,15 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       "two-level curriculum rank diverged from the single-window lane")
   }
 
+  test("pipe_curriculum on an empty corpus returns zero rows") {
+    // the dbkt divisor comes from max(doc_id), which is NULL over no rows
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-emptydocs").toString
+    Seq.empty[(Long, String, Long)].toDF("doc_id", "lang", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    assert(SparkEntry.queries("pipe_curriculum")(spark, dir).count() == 0L)
+  }
+
   test("q_tfidf_top_terms / text_zipf_fit: two-level top-k — bucketed pre-rank feeds the final window, bit-equal to the single-window lane") {
     assume(new java.io.File("/root/testdata/sf0.001").isDirectory)
     // r17 (verdict item 5, guide §8): the per-lang / global rank windows
